@@ -9,28 +9,42 @@ import org.apache.spark.sql.functions._
   * the streaming jobs ([[TaxiJobs]]) and batch/e2e tests. Each transform
   * works identically on a `read` or `readStream` source (Structured
   * Streaming's core contract), which is what makes the final-value tests
-  * meaningful.
+  * meaningful. The Task4 trend rule ([[trending]]) is the exception: it
+  * runs on the driver over the micro-batch collected once, so a trigger
+  * stays one Spark job.
   */
 object TaxiPipelines {
 
   /** Streaming (or batch) scan of the heterogeneous taxi CSV feed.
     * `maxFilesPerTrigger=60` reproduces the reference's ~1-hour-of-event-
     * time micro-batches (`Task2.py:40`); file pickup order is arbitrary,
-    * which the update-mode sinks must tolerate (SURVEY §2.1 S1). */
+    * which the update-mode sinks must tolerate (SURVEY §2.1 S1).
+    *
+    * The streaming branch sets a conf on the caller's session: it raises
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` to at least
+    * `maxFilesPerTrigger` (a larger value already set is kept). The file
+    * source resolves each trigger's paths through an `InMemoryFileIndex`
+    * and reads that threshold live from this session; above it (default
+    * 32) the listing becomes its own Spark job with one task per file, a
+    * second job on every full trigger. */
   def scan(spark: SparkSession, path: String,
            schema: org.apache.spark.sql.types.StructType,
            streaming: Boolean = true,
            maxFilesPerTrigger: Int = 60): DataFrame = {
-    if (streaming)
+    if (streaming) {
+      if (spark.conf.get(ListingThreshold).toLong < maxFilesPerTrigger)
+        spark.conf.set(ListingThreshold, maxFilesPerTrigger.toLong)
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
         .csv(path)
-    else
+    } else
       spark.read.schema(schema)
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
         .csv(path)
   }
+
+  private val ListingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
   /** Task2 (`/root/reference/Task2.py:44-51`): hourly dropoff counts via a
     * 1-hour tumbling event-time window; `hour` = hour of window end. */
@@ -74,25 +88,33 @@ object TaxiPipelines {
       .withColumn("timestamp",
         hour(col("window.end")) * 3600 + minute(col("window.end")) * 60)
 
-  /** Task4 trend detector (`Task4.py:124-132`), applied to one update-mode
-    * micro-batch: windows whose count ≥ 10 and ≥ 2× the same-HQ window
-    * 600 s earlier *within this batch's updates* — the intra-batch scoping
-    * is the reference's semantics, preserved. Output: headquarters,
-    * count, timestamp, prev_count. */
-  def trending(batch: DataFrame): DataFrame = {
-    val prev = batch.select(
-      col("headquarters").as("headquarters_1"),
-      col("count").as("count_1"),
-      col("timestamp").as("timestamp_1"))
-    batch.join(prev,
-        col("timestamp") - col("timestamp_1") === 600 &&
-        col("headquarters") =!= "none" &&
-        col("headquarters") === col("headquarters_1") &&
-        col("count") >= 10 &&
-        col("count") - col("count_1") >= col("count_1"),
-        "inner")
-      .select(col("headquarters"), col("count"), col("timestamp"),
-              col("count_1").as("prev_count"))
+  /** One Task4 update-mode micro-batch, collected once as
+    * `(headquarters, count, timestamp)` rows: the only Spark job of a
+    * trigger. The batch holds the windows the trigger updated — at most
+    * (event-time span ÷ 10 min) × 3 rows, whatever the row volume. */
+  def windowCounts(batch: DataFrame): Seq[(String, Long, Int)] =
+    batch.select("headquarters", "count", "timestamp").collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
+
+  /** Task4 trend rule (`Task4.py:124-132`) over one collected micro-batch
+    * ([[windowCounts]]): a window fires when its count is ≥ 10 and ≥ 2×
+    * the same-HQ window 600 s earlier *within this batch's updates* — the
+    * intra-batch scoping is the reference's semantics, preserved. The
+    * reference's theta self-join becomes a driver-side hash lookup on
+    * `(hq, timestamp − 600)` and keeps the join's semantics:
+    *   - every earlier row under that key pairs with the window, so two
+    *     days' windows sharing a seconds-of-day stamp keep the join's
+    *     multiplicity;
+    *   - `none` and null headquarters never fire;
+    *   - stamps are seconds of day, so adjacency breaks at midnight (a
+    *     window ending at 00:00, stamp 0, never sees stamp 85800).
+    * Output: headquarters, count, timestamp, prev_count. */
+  def trending(batch: Seq[(String, Long, Int)]): Seq[(String, Long, Int, Long)] = {
+    val prev = batch.groupMap { case (hq, _, ts) => (hq, ts) } { case (_, n, _) => n }
+    for {
+      (hq, n, ts) <- batch if hq != null && hq != "none" && n >= 10
+      p <- prev.getOrElse((hq, ts - 600), Nil) if n - p >= p
+    } yield (hq, n, ts, p)
   }
 
   /** Word count transform (`Client.py:22-24` as Structured Streaming):

@@ -132,9 +132,9 @@ class TaxiStreamSpec extends AnyFunSuite {
     assert(golden4.replace("(10,", "(12,") == Files.readString(f),
       s"format bytes differ from golden: ${Files.readString(f)}")
     // streaming batch output == batch-mode trend computation on same files
-    val expected = TaxiPipelines.trending(TaxiPipelines.tenMinHqCounts(
-        TaxiPipelines.scanSplit24(spark, in.toString, streaming = false)))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
+    val expected = TaxiPipelines.trending(TaxiPipelines.windowCounts(
+        TaxiPipelines.tenMinHqCounts(
+          TaxiPipelines.scanSplit24(spark, in.toString, streaming = false)))).toSet
     val gotFiles = out.toFile.list.toSeq.filter(_.startsWith("part-"))
     assert(gotFiles.size == expected.map(_._3).size)
   }
