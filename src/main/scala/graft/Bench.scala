@@ -1,6 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+
+  /** Executes the FULL plan and discards rows executor-side. Not
+    * `count()`: under count() Catalyst's EliminateSorts drops each
+    * query's final presentation orderBy, so sorted queries were slightly
+    * under-timed. */
+  private[graft] def runNoop(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
 
   /** Max stdout-line length the driver's 2000-char tail window can hold
     * (margin for our trailing newline; build.sbt's showSuccess := false
@@ -70,36 +77,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on the fastest local storage — see
-      // [[graft.Sessions.localDir]] (tmpfs here; NVMe on a cluster)
-      .config("spark.local.dir", Sessions.localDir)
-      // ObjectHashAggregate (collect_list/collect_set paths: the dedup
-      // rarity index, PQ LUT maps, …) falls back to SORT-based
-      // aggregation past 128 distinct groups per task — a default so
-      // conservative the fallback fired on EVERY task at sf0.1
-      // (numTasksFallBacked=32; measured r21: dedup_cand_pairs -37%
-      // CPU, dedup_source_overlap -17% with the fallback lifted).
-      // 8192 groups × doc-sized lists is a few MB per task at any
-      // scale; the fallback (graceful, per-task) still guards the
-      // pathological case. Parameterized for cluster tuning.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "8192"))
-      // spark.sql.join.preferSortMergeJoin deliberately stays at its
-      // default: an r21 sequential A/B showed apparent 25-46% wins that
-      // a null test (conf set to its own default) reproduced — pure JIT
-      // order bias. The honest interleaved A/B (tools/Scratch, r21)
-      // measured SMJ vs shuffled-hash within +-10% noise at sf0.1, with
-      // only rel_salted_join's plan changing at all. See
-      // OPTIMIZATION_r21.md "O4 (negative result)".
-      .getOrCreate()
+    val sfDir = Sessions.sfDir
+    val spark = Sessions.batch(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Host load at bench start: a contaminated run (concurrent host load)
     // is then self-identifying in the artifact (see BASELINE.md, round 4
@@ -149,7 +128,7 @@ object Bench {
         .foreach { case (_, fn) =>
         // warm through the same noop-write path the timed runs use, so the
         // sort/write codegen is compiled before timing too
-        try { fn(spark, warmDir).write.mode("overwrite").format("noop").save(); spark.catalog.clearCache() }
+        try { runNoop(fn(spark, warmDir)); spark.catalog.clearCache() }
         catch { case _: Throwable => () }
       }
     // clearCache between queries: several operators persist() small derived
@@ -163,13 +142,9 @@ object Bench {
     // BOTH the stdout line and BENCH.json — an artifact with failed:[...]
     // is self-identifying as not a performance measurement for those rows.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
-      // noop write, not count(): under count() Catalyst's EliminateSorts
-      // drops each query's final presentation orderBy, so sorted queries
-      // were slightly under-timed. The noop sink executes the FULL plan
-      // (sort included) and discards rows executor-side.
-      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
+      try { runNoop(fn(spark, sfDir)) }
       catch { case e: Throwable =>
         if (failed.add(name))
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")

@@ -211,8 +211,9 @@ object Dedup extends QueryModule {
     * (array_intersect over the full shingle sets — the build's real
     * work) ran in FOUR tasks on a 32-core host. That, not any
     * algorithmic term, was the bulk of the "7×/decade" sf10 growth:
-    * DedupPairsProbe measured every posting-list term flat-linear
-    * (max m = 8 at 5k/50k/500k docs — the prefix filter already bounds
+    * the r17 posting-list probe measured every term flat-linear
+    * (BASELINE.md "dedup_cand_pairs growth diagnosed"; max m = 8 at
+    * 5k/50k/500k docs — the prefix filter already bounds
     * the Σm² term the r16 verdict suspected, so a maxDf cap would have
     * pruned nothing). repartition inserts one tiny exchange of the
     * verified pairs (≤ tens of MB at any measured scale) and keeps the
@@ -829,10 +830,8 @@ object Dedup extends QueryModule {
     // interleaved A/B in OPTIMIZATION_r22.md). No-op whenever the source
     // already splits to >= the session's parallelism.
     val p = s.sparkContext.defaultParallelism
-    val fanoutOn = s.conf.get("graft.scan.fanout",
-      sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true")) != "false"
     val spread =
-      if (fanoutOn && !docs.isStreaming && docs.rdd.getNumPartitions < p)
+      if (Tables.fanOutOn(s) && !docs.isStreaming && docs.rdd.getNumPartitions < p)
         docs.repartition(p, $"doc_id")
       else docs
     spread
@@ -897,7 +896,7 @@ object Dedup extends QueryModule {
     // triplicates the scan + shingle UDF + corpus agg subtree (no
     // ReusedExchange node appears). Lifecycle (ADVICE r21, low): like
     // [[rarityDocs]], the cache is released by the harness's
-    // clearCache-per-query (Bench/Verify/QueryBench); a long-running
+    // clearCache-per-query (Bench/Verify/Measure); a long-running
     // session embedding this query should wrap it in its own
     // release scope the way [[graft.operators.Similarity]] index builds
     // do. The pinned relation is one row per distinct shingle — corpus-

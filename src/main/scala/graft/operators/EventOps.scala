@@ -490,9 +490,10 @@ object EventOps extends QueryModule {
     // 4th rung (round 14): the sf10 probe measured the (8,53) top rung
     // one decade up (150k users) at 2,817 candidates/user — 4.2× per
     // decade — and 175 s wall even after the broadcast-verify fix. The
-    // CapSweep rung sweep at 150k (ts-shifted replicas, brute ground
-    // truth): 9×64 → 2,581/user, 10×72 → 2,017, 11×80 → 1,429 (79.5 s),
-    // all at recall 1.00 with cap 400. 11×80 holds candidates/user
+    // r14 rung sweep at 150k (ts-shifted replicas, brute ground truth;
+    // BASELINE.md "Two-decade probe at sf10"): 9×64 → 2,581/user,
+    // 10×72 → 2,017, 11×80 → 1,429 (79.5 s), all at recall 1.00 with
+    // cap 400. 11×80 holds candidates/user
     // growth at ~2.1× per decade (666 → 1,429 from the 15k rung) —
     // inside the ≤3× target the sign-LSH family meets. Threshold keeps
     // the ladder's ×2.5 geometric spacing.
@@ -505,10 +506,10 @@ object EventOps extends QueryModule {
     // pk += 1 (the +1 concatenation per 1/p2 ≈ 2.5× rule above) and
     // pt ×= 1.45 rounded (the measured 24→32→53→80 trajectory's mean
     // step, above the ×1.33 recall floor). These rungs are the RULE's
-    // prediction, to be re-calibrated the way r14's CapSweep calibrated
-    // the 11×80 rung when a corpus actually reaches them; EvRungProbe
-    // (tools/) measures candidate volume at a chosen rung — measured
-    // rows live in BASELINE.md ("E2LSH extension rungs", r19).
+    // prediction, to be re-calibrated the way r14's rung sweep calibrated
+    // the 11×80 rung when a corpus actually reaches them — measured rows
+    // live in BASELINE.md ("E2LSH extension rungs", r19/r20) and
+    // EV_RECALL_r20.jsonl.
     Iterator.iterate((78125L, 11, 80)) { case (thr, pk, pt) =>
       (thr * 5 / 2, pk + 1, math.round(pt * 1.45).toInt)
     }.drop(1).take(3).toSeq
@@ -528,7 +529,8 @@ object EventOps extends QueryModule {
   // QUADRATICALLY in their size — are truncated, and the table count
   // (24-53 at the capped rungs) gives a truncated-away near pair many
   // independent chances to survive elsewhere. Cap=400 is MEASURED
-  // (CapSweep, 15k-user rung (7,32), ts-shifted replica corpus): it
+  // (r14 cap sweep, 15k-user rung (7,32), ts-shifted replica corpus;
+  // BASELINE.md "Hot-bucket postings caps"): it
   // leaves the top-20 recall UNCHANGED at 0.85 and the post-distinct
   // candidate set within 0.7% — its entire win is cutting the
   // PRE-distinct pair blowup, which grows with Σ m² per bucket while
@@ -607,7 +609,7 @@ object EventOps extends QueryModule {
 
   /** Fused candidate-and-verify stream: the exact distance is computed
     * in the bucket self-join's OUTPUT PIPELINE, so only `(user_a,
-    * user_b, dist)` — 24 bytes — ever reaches [[tsTopPairs]]'s heap and
+    * user_b, dist)` — 24 bytes — ever reaches [[tsSimilarity]]'s heap and
     * the candidate pair stream is never materialized to an exchange.
     * This is the r19 slim-top reshape of the r18 scale-killer: the
     * previous plan pushed the 10⁹⁺-row pre-distinct pair stream through
@@ -701,29 +703,11 @@ object EventOps extends QueryModule {
     * with id tie-breaks — and the ladder is integer thresholds on the
     * exact user count, so both engines deterministically pick the same
     * rung. */
-  def tsSimilarity(s: SparkSession, dir: String): DataFrame =
-    tsTopPairs(s, dir, None)
-
-  /** [[tsSimilarity]] with a cap OVERRIDE for the calibration sweep
-    * ([[graft.tools.CapSweep]]); the registered query always passes
-    * `None` → the shipped [[profCap]] ladder value. */
-  private[graft] def tsTopPairs(s: SparkSession, dir: String,
-                                capOverride: Option[Option[Long]],
-                                rungOverride: Option[(Int, Int)] = None): DataFrame = {
+  def tsSimilarity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val vecs = profileVecs(s, dir).persist() // counted once for the rung pick
     val nUsers = vecs.count()
-    val (pt, pk) = rungOverride.getOrElse(profParams(nUsers))
-    val cap = capOverride.getOrElse(profCap(nUsers))
-    // Probe-only regime override (VERDICT r19 #5): the fat-bucket attach
-    // branch (> [[BroadcastProfileMaxUsers]]) needs its linear-shuffle /
-    // bounded-disk claims measured at a corpus the host can actually
-    // hold, so the probe lowers the bound via env and A/Bs the two
-    // regimes on the SAME corpus+rung — results are identical by
-    // construction (the attach is a plan choice; [[tsScored]] scaladoc),
-    // which the A/B also confirms. Driver/bench runs never set this.
-    val bcastMax = sys.env.get("SPARK_GRAFT_EV_BCAST_MAX").map(_.toLong)
-      .getOrElse(BroadcastProfileMaxUsers)
+    val (pt, pk) = profParams(nUsers)
     // Slim-top shape (r19; replaces the r14 distinct + broadcast/SMJ
     // verify that blew the disk at ~1M users — see [[tsScored]]): the
     // scored stream feeds a TakeOrdered heap of size ProfTopK·pt, the
@@ -747,8 +731,8 @@ object EventOps extends QueryModule {
     // rung — far under topKSortFallbackThreshold), merges once, and the
     // dedup aggregate + final top-20 run over that single tiny set. No
     // exchange ever sees a pair-stream row. PlanSpec pins this.
-    tsScored(vecs, pt, pk, cap = cap,
-        broadcastAttach = nUsers <= bcastMax)
+    tsScored(vecs, pt, pk, cap = profCap(nUsers),
+        broadcastAttach = nUsers <= BroadcastProfileMaxUsers)
       .orderBy($"dist".asc, $"user_a".asc, $"user_b".asc)
       .limit(ProfTopK * pt)
       .groupBy($"user_a", $"user_b").agg(min($"dist").as("dist"))

@@ -433,7 +433,8 @@ object Similarity extends QueryModule {
   // so gated hashes sit on the uncapped base rung, and the QUERY side
   // is never capped (a query always probes its own buckets).
   //
-  // Mult choice is MEASURED (CapSweep, 40k-vector rung (9,10), bucket
+  // Mult choice is MEASURED (r14 cap sweep, BASELINE.md "Hot-bucket
+  // postings caps"; 40k-vector rung (9,10), bucket
   // sizes mean 41 / p99 591 / max 1269): deeper caps trade recall for
   // volume near-linearly — mult 8 cut candidates/query 43% but
   // multiprobe recall 0.545→0.484, mult 4 → 0.425 — because sign-LSH
@@ -546,10 +547,10 @@ object Similarity extends QueryModule {
         Seq("tbl", "bucket"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
-    // dedup=false exposes the pre-distinct stream so volume probes can
-    // HLL-count it with NO pair-stream shuffle (the EvRungProbe r19
-    // treatment; the exact .distinct() count at the 4M rung was its own
-    // ~10⁹-row shuffle and half of that probe's disk exhaustion)
+    // dedup=false exposes the pre-distinct stream so SimilarityScaleBench
+    // can HLL-count it with NO pair-stream shuffle (the exact .distinct()
+    // count at the 4M rung was its own ~10⁹-row shuffle and half of that
+    // run's disk exhaustion; BASELINE.md "The 4M-vector ANN rung")
     if (dedup) pairs.distinct() else pairs
   }
 
@@ -704,15 +705,7 @@ object Similarity extends QueryModule {
         expr("shiftleft(CAST(1 AS BIGINT), j)").as("flip"))
   }
 
-  def topkLshMultiprobeRanked(s: SparkSession, dir: String): DataFrame =
-    topkRanked(s, dir, LshRankedProbeMult)
-
-  /** [[topkLshMultiprobeRanked]] with a probe-budget OVERRIDE (extra
-    * probes = `mult · tables`) for the calibration sweep
-    * ([[graft.tools.SimilarityScaleBench]]); the registered query always
-    * passes [[LshRankedProbeMult]]. */
-  private[graft] def topkRanked(s: SparkSession, dir: String,
-                                mult: Int): DataFrame = {
+  def topkLshMultiprobeRanked(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = vecs(s, dir)
     val n = e.count()
@@ -722,7 +715,7 @@ object Similarity extends QueryModule {
     val q = queriesOf(e)
     val qb = buckets.join(q, $"vec_id" === $"query_id")
       .select($"query_id", $"tbl", $"bucket")
-    val flipped = qb.join(rankedFlips(q, pt, pb, mult * pt),
+    val flipped = qb.join(rankedFlips(q, pt, pb, LshRankedProbeMult * pt),
         Seq("query_id", "tbl"))
       .select($"query_id", $"tbl", $"bucket".bitwiseXOR($"flip").as("bucket"))
     // slim probe → bucket join → distinct pairs (the r13 slim-pair shape
@@ -1611,37 +1604,14 @@ object Similarity extends QueryModule {
 
   /** The inverted-list relation `(vec_id, cid, code0..7)`: cell
     * assignment merged with the PQ codes, built once per index (see
-    * [[IvfPqRelations]]). Exposed separately so the dial sweep can
-    * re-derive postings for a retrained PQ half against the same coarse
-    * quantizer. */
-  private[graft] def ivfPqPostings(e: DataFrame, cent: DataFrame,
+    * [[IvfPqRelations]]). */
+  private def ivfPqPostings(e: DataFrame, cent: DataFrame,
                                    cbk: DataFrame): DataFrame = {
     val codes = pqAssign(e, cbk).select(
       col("vec_id") +:
         (0 until PqBlocks).map(b => col(s"m$b.c").as(s"code$b")): _*)
     cellAssignment(e, cent).select(col("vec_id"), col("cid"))
       .join(codes, "vec_id")
-  }
-
-  /** Dial-sweep serve ([[graft.tools.SimilarityScaleBench]] only): serve
-    * from `idx` with an overridden nprobe and/or a PQ half retrained at
-    * sub-codebook size `ks` — the coarse quantizer (cent/assign) is
-    * PQ-independent and reused, so a ks point costs one codebook train +
-    * one encode, not a full index build. Everything downstream
-    * (cid-keyed LUT maps, ADC, shortlist, rerank) is size-agnostic. */
-  private[graft] def ivfPqServeDial(queries: DataFrame, e: DataFrame,
-      idx: IvfPqRelations, ks: Option[Int], nprobe: Int,
-      shortlist: Int): DataFrame = {
-    val (cbk, postings) = ks match {
-      case Some(n) =>
-        // retrain the PQ half only; re-derive postings against the
-        // reused coarse quantizer (one codebook train + one merge)
-        val c = pqCodebook(e, n)
-        (c, ivfPqPostings(e, idx.cent, c))
-      case None => (idx.cbk, idx.postings)
-    }
-    ivfPqServe(queries, e, idx.cent, postings, cbk,
-      nprobe = nprobe, excludeSelf = true, shortlist = shortlist)
   }
 
   /** Serve `(query_id, qv, qnorm)` queries from a prebuilt

@@ -222,8 +222,8 @@ object AnnServeStream {
     * probes its own buckets plus the `mult · tables` single-bit flips
     * with the smallest projection margins. Probe count is
     * `tables · (1 + mult)` at every rung, so per-query serve cost stops
-    * riding the corpus ladder; the recall trade per rung is measured in
-    * SimilarityScaleBench (`ann_ranked_sweep`). Everything is
+    * riding the corpus ladder; the recall trade per rung is recorded in
+    * SIMILARITY_SCALE_r15.json (`ann_ranked_sweep` rows). Everything is
     * query-side — the index, its capped postings, and the stored rung
     * are shared with the all-flips form unchanged. Same serving
     * contract: no self-exclusion, and a corpus-member query still

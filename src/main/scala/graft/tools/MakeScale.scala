@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Sessions, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a K× scale-up of a testdata dir (default: sf0.1 × 10 ≈ sf1)
@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *     every 3-token shingle ([[graft.functions.ShingleArray]]) contains
   *     a suffixed token, so replicas share NO shingles — near-dup pair
   *     output grows K×, not K²× (same construction as
-  *     [[DedupScaleBench]], which pinned the linearity), while 2/3 of
+  *     the r4 dedup scaling run, which pinned the linearity —
+  *     BASELINE.md "Dedup scaling, one scale up"), while 2/3 of
   *     tokens keep their identity for stopword/char-distribution ops;
   *   - `embeddings.embedding` is rotated by `(r * 7) mod dim` positions:
   *     a coordinate permutation is orthogonal, so WITHIN a replica all
@@ -49,14 +50,7 @@ object MakeScale {
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     val tableFilter = args.lift(3).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.batch(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def rep(base: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =

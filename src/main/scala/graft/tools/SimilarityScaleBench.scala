@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.operators.{EventOps, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical evidence for the similarity family's two scale claims
@@ -18,7 +17,8 @@ import org.apache.spark.sql.functions._
   *  2. CANDIDATE SELECTIVITY UNDER GROWTH — the argument for the
   *     bucket-join shape at 100 TB is that candidate volume grows far
   *     slower than the n²/2 all-pairs term. Corpus construction mirrors
-  *     DedupScaleBench's isomorphic-replica trick: replica k of `events`
+  *     the isomorphic-replica trick of the dedup scaling run (BASELINE.md
+  *     "Dedup scaling, one scale up"): replica k of `events`
   *     shifts every timestamp by k hours (a coordinate ROTATION of the
   *     24-dim hourly profile — Euclidean distances within a replica are
   *     preserved, bucket hashes are not), and replica k of `embeddings`
@@ -33,14 +33,8 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityScaleBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val sfDir = Sessions.sfDir
+    val spark = Sessions.batch(Sessions.cpus)
       // r19 (4M-rung post-mortem): shuffle files of FINISHED jobs
       // persist until their ShuffleDependency objects are GC'd — on a
       // 64 GB driver heap no GC ever ran, so successive probe waves
@@ -65,14 +59,13 @@ object SimilarityScaleBench {
 
     def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
 
-    // Block filter (r18): SPARK_GRAFT_SIM_BLOCKS="lsh,rsweep" runs only
+    // Block filter (r18): SPARK_GRAFT_SIM_BLOCKS="lsh,serve" runs only
     // the named blocks — the 1M ranked block alone is ~30 min of
-    // interleaved min-of-3 timing, and the targeted re-measure runs
-    // (R-sweep, 4M rung, 2M semdedup confirm) must not re-pay every
-    // sibling block. "fixed" names the bench-SF header sections 1a-1c;
-    // per-k block names: lsh, ranked, ivfpq, ivf, serve
-    // (rsweep/ranked-sweep/sem/ev keep their own env gates). Unset = all
-    // blocks (the artifact-producing default). Skips are LOGGED so a
+    // interleaved min-of-3 timing, and a targeted re-measure of one block
+    // must not re-pay every sibling. "fixed" names the bench-SF header
+    // sections 1a-1c; per-k block names: lsh, ranked, ivfpq, ivf, serve
+    // (the ev section keeps its own SPARK_GRAFT_SIM_EV_K gate). Unset =
+    // all blocks (the artifact-producing default). Skips are LOGGED so a
     // filtered artifact can't be misread as a full run.
     val simBlocks = sys.env.get("SPARK_GRAFT_SIM_BLOCKS")
       .map(_.split(",").filter(_.nonEmpty).map(_.trim).toSet)
@@ -361,17 +354,6 @@ object SimilarityScaleBench {
       if (skipRecall)
         System.err.println("[sim-scale] WARNING: SPARK_GRAFT_SIM_NO_RECALL" +
           " — recall-vs-brute skipped; JSON recall fields will be null")
-      // Fail fast (ADVICE r19): the ranked/R sweeps exist ONLY to measure
-      // recall — combining them with NO_RECALL would still force the
-      // brute-truth shuffle through bf/inTruth, defeating the flag's
-      // purpose. Refuse the combination instead of silently paying it.
-      val recallSweeps = Seq("SPARK_GRAFT_SIM_RANKED_SWEEP",
-        "SPARK_GRAFT_SIM_R_SWEEP", "SPARK_GRAFT_SIM_NPROBE_SWEEP",
-        "SPARK_GRAFT_SIM_KS_SWEEP").filter(sys.env.contains)
-      if (skipRecall && recallSweeps.nonEmpty)
-        sys.error(s"SPARK_GRAFT_SIM_NO_RECALL is incompatible with " +
-          s"${recallSweeps.mkString(",")} — these sweeps measure recall " +
-          "and would force the brute-truth shuffle the flag exists to avoid")
       if (blockOn("lsh")) {
         val buckets = Similarity.lshBuckets(e, tables = pt, bits = pb).persist()
         // the registered query's corpus side: hot-bucket-capped (r14)
@@ -409,7 +391,7 @@ object SimilarityScaleBench {
         // the recall set is collected OUTSIDE the timed region (ADVICE
         // r15: the old ranked arm paid collect+Set construction while
         // all-flips paid count() only — biased against ranked). Min-of-3
-        // INTERLEAVED passes per arm (the TimeQ / ann_ranked_minof3
+        // INTERLEAVED passes per arm (the ann_ranked_minof3
         // discipline — ADVICE r16 flagged the shipped min-of-2 as unable
         // to reproduce the documented min-of-3 headline): r16 measured
         // single-shot rungs swinging up to 3× with session state (62 s
@@ -448,23 +430,6 @@ object SimilarityScaleBench {
         println(s"""{"bench":"ann_ranked_scale","k":$k,"vectors":$nVec,"tables":$pt,"bits":$pb,"probes_per_query":${pt * (1 + Similarity.LshRankedProbeMult)},"allflips_probes":${pt * (1 + pb)},"recall":$rkRecS,"recall_allflips":$mpRecRankedS,"sec":${r3(rsec)},"sec_allflips":$msecS}""")
       }
 
-      // Ranked probe-budget calibration sweep (r15): recall/wall at
-      // extra-probe budgets mult·pt for each listed mult — the measured
-      // justification for the shipped LshRankedProbeMult, the same
-      // sweep discipline as the hot-bucket CapSweep. Env-gated
-      // (SPARK_GRAFT_SIM_RANKED_SWEEP, e.g. "1,2,3,4"); combine with
-      // SPARK_GRAFT_SIM_K to pick the rung.
-      sys.env.get("SPARK_GRAFT_SIM_RANKED_SWEEP")
-        .map(_.split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq)
-        .getOrElse(Seq.empty).foreach { mult =>
-        val t1 = System.nanoTime()
-        val nbrs = nbrSet(Similarity.topkRanked(spark, dir, mult))
-        val ssec = (System.nanoTime() - t1) / 1e9
-        spark.catalog.clearCache()
-        val rec = nbrs.filter(inTruth).intersect(bf).size.toDouble / bf.size
-        println(s"""{"bench":"ann_ranked_sweep","k":$k,"vectors":$nVec,"tables":$pt,"bits":$pb,"mult":$mult,"probes_per_query":${pt * (1 + mult)},"recall":${r3(rec)},"sec":${r3(ssec)}}""")
-      }
-
       // IVF×PQ at THIS corpus size (r14): the cell-count rung the ladder
       // picks, the measured per-query code-scan fraction (must FALL
       // across rungs where the fixed grid sat flat at 0.375), and
@@ -481,90 +446,6 @@ object SimilarityScaleBench {
         spark.catalog.clearCache()
         val (_, cells, nprobe, frac) = ivfPqScanFraction(dir)
         println(s"""{"bench":"ann_ivfpq_scale","k":$k,"vectors":$nVec,"cells":$cells,"nprobe":$nprobe,"scan_fraction":${r3(frac)},"recall":$ivfpqRecS,"sec":${r3(isec)}}""")
-      }
-
-      // IVF×PQ exact-rerank shortlist sweep (round 18, VERDICT r17 #3):
-      // recall@5 fell 0.79 → 0.344 → 0.201 across 2k/132k/1M with R
-      // fixed at 300 while every other constant rides a ladder — PQ
-      // distortion dominates the floor, and R is the knob that buys it
-      // back. Recall AND wall per R at THIS rung, same index and truth
-      // set across the sweep (index built once; serve is the only arm
-      // that moves). Env-gated: SPARK_GRAFT_SIM_R_SWEEP="300,600,1200".
-      sys.env.get("SPARK_GRAFT_SIM_R_SWEEP")
-        .map(_.split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq)
-        .getOrElse(Seq.empty) match {
-        case rs if rs.nonEmpty =>
-          val idx = Similarity.ivfPqIndex(e)
-          val queries = e.where($"vec_id" % 50 === 0)
-            .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-          rs.foreach { r =>
-            val t1 = System.nanoTime()
-            val got = nbrSet(Similarity.ivfPqServe(queries, e, idx.cent,
-              idx.postings, idx.cbk, nprobe = idx.nprobe,
-              excludeSelf = true, shortlist = r))
-            val ssec = (System.nanoTime() - t1) / 1e9
-            val rec = got.filter(inTruth).intersect(bf).size.toDouble / bf.size
-            println(s"""{"bench":"ann_ivfpq_r_sweep","k":$k,"vectors":$nVec,"cells":${idx.cells},"nprobe":${idx.nprobe},"shortlist":$r,"recall":${r3(rec)},"sec":${r3(ssec)}}""")
-          }
-          spark.catalog.clearCache()
-        case _ => ()
-      }
-
-      // IVF×PQ dial sweep past R (round 20, VERDICT r19 #3): the r19
-      // R-sweep proved recall does NOT plateau in the rerank shortlist
-      // (0.514 at 1M, R=4800), so the next dials are measured here on
-      // the SAME built index and truth set:
-      //   SPARK_GRAFT_SIM_NPROBE_SWEEP="64,96,128" — more probed cells
-      //     (coarse-quantizer miss recovery; candidate volume rises
-      //     linearly in nprobe);
-      //   SPARK_GRAFT_SIM_KS_SWEEP="16,64,256" — PQ sub-codebook size
-      //     (ADC distortion is the shortlist's ranking noise; ks is the
-      //     codebook resolution — 16 entries = 4-bit codes today). A ks
-      //     point retrains ONLY the PQ half; cent/assign are reused.
-      val npSweep = sys.env.get("SPARK_GRAFT_SIM_NPROBE_SWEEP")
-        .map(_.split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq)
-        .getOrElse(Seq.empty)
-      val ksSweep = sys.env.get("SPARK_GRAFT_SIM_KS_SWEEP")
-        .map(_.split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq)
-        .getOrElse(Seq.empty)
-      if (npSweep.nonEmpty || ksSweep.nonEmpty) {
-        val idx = Similarity.ivfPqIndex(e)
-        // Above the full-brute bound the truth set covers only the
-        // knuth-sampled queries — serve ONLY those in the sweep (r20):
-        // recall estimates are identical, and the shortlist rank window
-        // over the full 20k-query ADC stream at the 1M rung is a
-        // ~60-100 GB shuffle PER POINT that exhausted the probe host's
-        // disk on the first attempt. Sweep walls therefore measure the
-        // sampled-query serve above the bound (relative across points,
-        // not comparable to the registered full-query wall).
-        val queries0 = e.where($"vec_id" % 50 === 0)
-          .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-        val queries = if (nVec <= BruteFullMaxVectors) queries0
-          else queries0.where(
-            ($"query_id" % 1000003L) * 2654435761L % 1000003L % 50 === 0)
-        npSweep.foreach { np =>
-          val t1 = System.nanoTime()
-          val got = nbrSet(Similarity.ivfPqServeDial(queries, e, idx,
-            ks = None, nprobe = np, shortlist = idx.shortlist))
-          val ssec = (System.nanoTime() - t1) / 1e9
-          spark.catalog.clearCache()
-          val rec = got.filter(inTruth).intersect(bf).size.toDouble / bf.size
-          println(s"""{"bench":"ann_ivfpq_nprobe_sweep","k":$k,"vectors":$nVec,"cells":${idx.cells},"nprobe":$np,"shortlist":${idx.shortlist},"recall":${r3(rec)},"sec":${r3(ssec)}}""")
-        }
-        // ks points serve at idx.nprobe unless SPARK_GRAFT_SIM_KS_NPROBE
-        // overrides it — the combined-dial point (bigger codebook AND
-        // wider probe) without a full cross-product sweep.
-        val ksNprobe = sys.env.get("SPARK_GRAFT_SIM_KS_NPROBE")
-          .map(_.trim.toInt).getOrElse(idx.nprobe)
-        ksSweep.foreach { ks =>
-          val t1 = System.nanoTime()
-          val got = nbrSet(Similarity.ivfPqServeDial(queries, e, idx,
-            ks = Some(ks), nprobe = ksNprobe, shortlist = idx.shortlist))
-          val ssec = (System.nanoTime() - t1) / 1e9
-          spark.catalog.clearCache()
-          val rec = got.filter(inTruth).intersect(bf).size.toDouble / bf.size
-          println(s"""{"bench":"ann_ivfpq_ks_sweep","k":$k,"vectors":$nVec,"cells":${idx.cells},"nprobe":$ksNprobe,"ks":$ks,"shortlist":${idx.shortlist},"recall":${r3(rec)},"sec":${r3(ssec)}}""")
-        }
       }
 
       // Plain IVF at THIS corpus size (r14, sf10-probe follow-up): the
@@ -639,149 +520,6 @@ object SimilarityScaleBench {
       }
     }
 
-    // ---- 2c. SemDeDup trained-centroid hand-over (round 15). The r14
-    // residue read: "one more decade at fixed 1,024 cells multiplies the
-    // pair term ~100×" — the hand-over ships ([[Similarity.semPlan]]:
-    // ≥131,072 vectors → 2,048 TRAINED centroids, the ivfPqCentroids
-    // Lloyd); these rows are its measurement. Per corpus size: the rung
-    // picked, the full registered-query wall, the within-cell pair term
-    // Σ C(sz, 2) (the quadratic work the verify join actually pays) and
-    // max cell size under the SHIPPED centroid rule — and, at trained
-    // sizes, the same two numbers under the pre-hand-over counterfactual
-    // (first-n seeds at the 1,024 cap) so the rung's win is a measured
-    // ratio, not an extrapolation. Env-gated (SPARK_GRAFT_SIM_SEM, a
-    // k-replica list, e.g. "20,66"): the semdedup corpus build + trained
-    // Lloyd is minutes per rung and most runs iterate on the ANN blocks.
-    sys.env.get("SPARK_GRAFT_SIM_SEM")
-      .map(_.split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq)
-      .getOrElse(Seq.empty).foreach { k =>
-      val dir = buildEmbCorpus(k)
-      val e = Similarity.vecs(spark, dir)
-      val n = e.count()
-      val (cells, trained) = Similarity.semPlan(n)
-      def pairStats(cent: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val sizes = Similarity.semAssign(e, cent)
-          .groupBy($"cid").agg(count(lit(1)).as("csz"))
-        val row = sizes.agg(
-          sum(($"csz" * ($"csz" - lit(1)) / 2).cast("long")).as("pairs"),
-          max($"csz").as("mx")).head()
-        (row.getLong(0), row.getLong(1))
-      }
-      def semWall(cent: org.apache.spark.sql.DataFrame): Double = {
-        // NO clearCache here (r19, ADVICE r18): the blanket clear
-        // unpersisted the persisted centroid frames, so every timed
-        // trained-arm sample re-ran Lloyd INSIDE the pair-phase timer —
-        // double-counting the separately-reported cent_sec_trained.
-        // Centroids now arrive as driver-local literal frames (no
-        // lineage to recompute), and the persisted corpus stays warm
-        // for both arms equally.
-        val t1 = System.nanoTime()
-        val slim = Similarity.semAssign(e, cent)
-        val assign = slim.join(e, "vec_id")
-        assign.as("a").join(assign.as("b"),
-            $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-          .withColumn("score",
-            round(graft.functions.VectorDot.vectorDot($"a.v", $"b.v")
-              / ($"a.norm" * $"b.norm"), 6))
-          .where($"score" >= Similarity.SemThreshold)
-          .count()
-        (System.nanoTime() - t1) / 1e9
-      }
-      // r18 REDESIGN of the trained-vs-counterfactual A/B. The r17 form
-      // compared the full registered query (global orderBy, run FIRST
-      // and COLD in the session) against a slim pair-count (run LAST
-      // and WARM): two of its own r16-documented 3× first-shot biases
-      // stacked onto the arm it was accusing, and this session measured
-      // the identical counterfactual computation at 732 s then 459 s
-      // an hour apart. Now both arms run the SAME slim semWall shape,
-      // interleaved min-of-2 after one untimed warm-up, differing ONLY
-      // in centroids (trained rung vs first-n at the same cell count);
-      // the centroid BUILD is timed separately per arm (the Lloyd
-      // premium made explicit), and the registered query's full wall —
-      // Lloyd + assignment + pairs + the output sort — is reported as
-      // its own field, not used as an A/B arm.
-      // Lineage break (r19, ADVICE r18): the centroid build is timed
-      // once here and the RESULT is collected into a driver-local
-      // literal frame — downstream samples physically cannot re-run
-      // Lloyd, whatever the cache state. Both builds stay
-      // broadcast-hinted like the originals (cells ≤ a few thousand
-      // 64-dim rows — a few MB).
-      def timedCent(mk: => org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Double) = {
-        val t1 = System.nanoTime()
-        val c = mk
-        val rows = c.collect() // materialization fence: Lloyd runs HERE
-        require(rows.nonEmpty)
-        val s = (System.nanoTime() - t1) / 1e9
-        val local = broadcast(spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), c.schema))
-        (local, s)
-      }
-      val (trainedCent, trainedCentSec) =
-        timedCent(Similarity.semCentroids(e, n))
-      val (firstnCent, firstnCentSec) =
-        timedCent(Similarity.centroidsOf(e, cells))
-      val (pairTerm, maxCell) = pairStats(trainedCent)
-      val counterfactual = if (trained) {
-        val (cfPairs, cfMax) = pairStats(firstnCent)
-        // untimed warm-up of BOTH arms (ADVICE r18: warming only the
-        // first-n arm made the trained arm's first timed sample its
-        // plan's first-ever execution): JIT + page cache + shuffle dirs
-        semWall(trainedCent); semWall(firstnCent)
-        val samples = (1 to 2).map(_ => (semWall(trainedCent), semWall(firstnCent)))
-        val tSec = samples.map(_._1).min
-        val cfSec = samples.map(_._2).min
-        s""","sec_pairs_trained":${r3(tSec)},"cent_sec_trained":${r3(trainedCentSec)},"pair_term_firstn":$cfPairs,"max_cell_firstn":$cfMax,"sec_pairs_firstn":${r3(cfSec)},"cent_sec_firstn":${r3(firstnCentSec)}"""
-      } else ""
-      // the registered query's user-facing wall, centroids re-derived
-      // inside (cache cleared): comparable to the r15-r17 `sec` fields
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val outPairs = Similarity.semDedup(spark, dir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      println(s"""{"bench":"sem_dedup_scale","k":$k,"vectors":$n,"cells":$cells,"trained":$trained,"pair_term":$pairTerm,"max_cell":$maxCell,"out_pairs":$outPairs,"sec":${r3(sec)}$counterfactual}""")
-    }
-
-    // ---- 2d. SemDeDup ONE-SHOT cells sweep (round 18, VERDICT r17 #1).
-    // The r17 2M-vector crossover run refuted the r16 pair-term-only
-    // break-even: the one-shot wall is dominated by the n × cells
-    // ASSIGNMENT scan, which wants c* ≈ √(n/2) — ~8× BELOW the shipped
-    // trained schedule. Before the schedule moves (an oracle-mirrored
-    // cross-engine rung change), this sweep measures the full one-shot
-    // wall — TRAINED centroids, Lloyd cost included, the exact shape the
-    // registered query runs past the hand-over — at several cell counts
-    // on the same corpus, so the recalibrated rung constant is picked
-    // from walls, not re-derived arithmetic. Env:
-    // SPARK_GRAFT_SIM_SEM_CELLS="k:c1,c2,..." (e.g. "1000:256,512,1024").
-    sys.env.get("SPARK_GRAFT_SIM_SEM_CELLS").foreach { spec =>
-      val Array(kStr, cellsStr) = spec.split(":", 2)
-      val k = kStr.trim.toInt
-      val cellList = cellsStr.split(",").filter(_.nonEmpty).map(_.trim.toInt).toSeq
-      val dir = buildEmbCorpus(k)
-      val e = Similarity.vecs(spark, dir)
-      val n = e.count()
-      cellList.foreach { c =>
-        val t0 = System.nanoTime()
-        val slim = Similarity.semAssign(e, Similarity.ivfPqCentroids(e, c))
-        val assign = slim.join(e, "vec_id")
-        val outPairs = assign.as("a").join(assign.as("b"),
-            $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-          .withColumn("score",
-            round(graft.functions.VectorDot.vectorDot($"a.v", $"b.v")
-              / ($"a.norm" * $"b.norm"), 6))
-          .where($"score" >= Similarity.SemThreshold)
-          .count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        val sizes = Similarity.semAssign(e, Similarity.ivfPqCentroids(e, c))
-          .groupBy($"cid").agg(count(lit(1)).as("csz"))
-        val row = sizes.agg(
-          sum(($"csz" * ($"csz" - lit(1)) / 2).cast("long")).as("pairs"),
-          max($"csz").as("mx")).head()
-        spark.catalog.clearCache()
-        println(s"""{"bench":"sem_cells_sweep","k":$k,"vectors":$n,"cells":$c,"pair_term":${row.getLong(0)},"max_cell":${row.getLong(1)},"out_pairs":$outPairs,"sec":${r3(sec)}}""")
-      }
-    }
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Sessions
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** Apples-to-apples throughput comparison with the reference's only
   * measured number: its shipped Task4 checkpoint shows 4 micro-batches
@@ -16,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object TaxiBench {
   def main(args: Array[String]): Unit = {
     val input = args.lift(0).getOrElse("/root/reference/taxi-data")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.batch(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val out = Files.createTempDirectory("taxibench_out").toString

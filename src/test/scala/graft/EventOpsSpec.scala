@@ -52,7 +52,7 @@ class EventOpsSpec extends AnyFunSuite {
     * switched on corpus size at 2M users — the gate corpora never reach
     * the fat regime, so without this pin a fat-path divergence would
     * only surface at million-user probe scale. Assert both regimes
-    * produce the identical top-20 through the full tsTopPairs tail
+    * produce the identical top-20 through the full tsSimilarity tail
     * (heap → dedup → final cut) at sf0.01. */
   test("tsScored broadcast and fat attach regimes agree end-to-end") {
     import spark.implicits._

@@ -3,15 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all specs (one JVM-wide session; suites reuse it). */
+/** Shared session for all specs (one JVM-wide session; suites reuse it):
+  * the batch mains' session, plus codegen failures surfacing as errors
+  * instead of silently falling back to interpreted evaluation. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = Sessions.batch(4)
     .config("spark.sql.codegen.fallback", "false")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
 }
